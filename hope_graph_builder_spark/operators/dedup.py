@@ -422,11 +422,6 @@ def simhash(text: Column, bits: int = 64) -> Column:
     return acc
 
 
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash (kept as the compact variant; see simhash())."""
-    return simhash(text, bits=16)
-
-
 # 63-bit simhash split into 4 disjoint bit bands. Pigeonhole: any pair
 # within Hamming distance 3 has at least one band with ZERO differing
 # bits, so banding is a COMPLETE index (exact recall, no

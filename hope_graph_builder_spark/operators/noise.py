@@ -24,22 +24,6 @@ PROVIDERS = ["hel", "syke"]
 LAYER_NAMES = [f"{p}_{s}" for p in PROVIDERS for s in SOURCES]
 
 
-def pivot_layer_max(matches: DataFrame, key: str | list[str] = "xy_id") -> DataFrame:
-    """(key, layer, db) match rows → one row per key with a column per
-    layer holding MAX db. Fuses J1's 13 sequential sjoins into one
-    grouped aggregation and subsumes A2's overlap dedup-keep-max
-    (utils.py:112-141): stacked invalid polygons max-reduce.
-
-    Deliberately NOT ``.pivot()``: Spark's PivotFirst aggregation
-    measured 8× slower than plain max(CASE WHEN) conditional
-    aggregates on 32M match rows (33.5s vs 4.1s) — same semantics,
-    same output schema."""
-    keys = [key] if isinstance(key, str) else key
-    return matches.groupBy(*keys).agg(
-        *[F.max(F.when(F.col("layer") == c, F.col("db"))).alias(c) for c in LAYER_NAMES]
-    )
-
-
 def _first_finite(cols: list[str]) -> Column:
     return F.coalesce(*[F.col(c).cast("double") for c in cols])
 
@@ -113,7 +97,7 @@ def interpolate_missing(
     ``ring_count`` samples, then 0 → NULL (noise_graph_join.py:88-98).
 
     ``ring_pivot`` = one row per ring point (key, layer columns), i.e.
-    the pivot_layer_max output joined back to all ring points so every
+    the flagship's left cell-join pivot over all ring points, so every
     key has exactly ring_count rows (unmatched → nulls).
     """
     aggs = [

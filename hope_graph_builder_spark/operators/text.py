@@ -208,26 +208,6 @@ def rolling_fingerprint(text: Column) -> Column:
     )
 
 
-def char_trigrams(text: Column) -> Column:
-    """All character trigrams of lower(text) — native transform over an
-    index sequence (guarded: <3-char strings yield an empty array, not
-    a descending sequence).
-
-    PERF WARNING: as a single Column expression the lambda re-evaluates
-    ``lower(text)`` (and the per-index substring re-scans the string)
-    for EVERY trigram — O(len²) per document in interpreted eval,
-    measured 10.7× slower than the hoisted form on 2000-char docs.
-    Hot paths must use ``with_char_trigrams`` (a DataFrame seam that
-    materializes the lowered char array once per row); this Column form
-    is for short strings and oracle parity only."""
-    s = F.lower(text)
-    seq = F.sequence(F.lit(1), F.length(s) - 2)
-    tris = F.transform(seq, lambda i: F.substring(s, i, F.lit(3)))
-    return F.when(F.length(s) >= 3, tris).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def with_char_trigrams(docs: DataFrame, text: str = "text",
                        out: str = "_tri") -> DataFrame:
     """``docs`` + an ``out`` column holding lower(text)'s character
@@ -235,8 +215,9 @@ def with_char_trigrams(docs: DataFrame, text: str = "text",
     are materialized in a prior projection (CollapseProject keeps a
     multiply-referenced non-trivial alias as its own project, so they
     are computed once per ROW), and each trigram is three O(1)
-    element_at lookups + one concat. Measured 10.7× faster than the
-    Column form on 2000-char docs (42.7 → 4.0 s for 31M trigrams).
+    element_at lookups + one concat. Measured 10.7× faster than a
+    per-index substring transform over lower(text) on 2000-char docs
+    (42.7 → 4.0 s for 31M trigrams).
     Identical results for BMP text (the corpus); astral code points
     would split differently (documented, not present in web-text
     lower() output the pipeline feeds)."""
@@ -249,8 +230,8 @@ def char_trigrams_fast(text: Column) -> Column:
     with zip_with (lambdas touch elements only), so the split runs a
     CONSTANT 3× per row regardless of plan rewrites — immune to the
     CollapseProject-under-Generate inlining that silently restored the
-    O(len²) form when the array was hoisted into a column. Identical
-    results to char_trigrams for BMP text."""
+    O(len²) form when the array was hoisted into a column. For BMP
+    text the result equals a substring(lower(text), i, 3) per index."""
     lt = F.lower(text)
     cs = F.split(lt, "")
     m = F.greatest(F.length(lt) - 2, F.lit(0))  # slice rejects negatives
@@ -333,7 +314,7 @@ def lang_pred_ngram_expr(tri: Column, profiles: dict[str, list[str]]) -> Column:
     split).
 
     ``tri`` is the PRE-COMPUTED trigram array column (hoist it with
-    with_char_trigrams — passing char_trigrams(text) inline would
+    with_char_trigrams — a trigram expression passed inline would
     re-evaluate the lowered string once per lang × trigram, the
     measured O(len²) trap)."""
     scores = {

@@ -4,12 +4,14 @@ noise_graph_join.py:17-138`, traced in SURVEY.md §3.1).
 
 Stage map (reference step → here):
   3  sampling points           sample_edges            (native explode)
-  4  xy_id dedup (CSE)         with_xy_id + unique_points
-  5  nodata-zone flag          native rect predicate
-  6  13-layer sjoin + dedup    pip_join_rect + pivot_layer_max (1 join,
-                               1 pivot — not 13 sequential sjoins)
+  4  xy_id dedup (CSE)         with_xy_id + location_exposures: one
+  6  13-layer sjoin + dedup    LEFT broadcast cell-join + ONE
+                               groupBy(xy_id) is both the dedup and the
+                               per-layer max pivot (not 13 sjoins)
+  5  nodata-zone flag          native rect predicate, or a pip_join_wkb
+                               semi-join for general nodata polygons
   7  missing split             Column predicate
-  8  kNN ring interpolation    ring_points + pip_join_rect +
+  8  kNN ring interpolation    ring_points + _left_cell_pivot +
                                exact 0.7-nearest quantile
   9  source coalesce/max/...   aggregate_noise_values
  10  union                     unionByName
@@ -19,40 +21,20 @@ Stage map (reference step → here):
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """Reused-subtree persistence — OPT-IN via HGBS_PERSIST=1.
-
-    Measured (MULT=400, 4×2-core executors): caching the wide pivoted
-    point table costs MORE than recomputing its prefix for the second
-    (tiny, column-pruned) consumer — 58.4 s with persist vs 47.9 s
-    without for the full flagship. A one-reuse cache of a 10-column
-    table rarely pays for its build; the prefix is a broadcast join +
-    one distinct. Set HGBS_PERSIST=1 when the reused subtree is
-    genuinely expensive (e.g. a shuffle-path PIP join at scale)."""
-    if os.environ.get("HGBS_PERSIST"):
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
 
 from hope_graph_builder_spark.operators.noise import (
     LAYER_NAMES,
     aggregate_noise_values,
     aggregate_noises_by_edge,
     interpolate_missing,
-    pivot_layer_max,
 )
 from hope_graph_builder_spark.operators.sampling import (
     ring_points,
     sample_edges,
     with_xy_id,
 )
-from hope_graph_builder_spark.operators.spatial_join import pip_join_rect
 
 SAMPLE_COLS = [
     "xy_id", "road", "train", "tram", "metro",
@@ -60,17 +42,24 @@ SAMPLE_COLS = [
 ]
 
 
-def unique_points(samples: DataFrame) -> DataFrame:
-    """Distinct quantized sampling locations. The reference keeps the
-    first duplicate's exact geometry (noise_graph_join.py:33); for
-    deterministic distributed execution we use the quantized location
-    itself (bin coordinate, 0.1 m grid) — documented deviation, same
-    equivalence classes."""
-    return samples.select("xy_id").distinct().select(
-        "xy_id",
-        (F.floor(F.col("xy_id") / 10_000_000) / 10.0).alias("x"),
-        (F.pmod(F.col("xy_id"), 10_000_000) / 10.0).alias("y"),
-    )
+def _in_rect(x: Column, y: Column, rect: tuple[float, float, float, float]) -> Column:
+    """Half-open containment in an axis-aligned rect."""
+    x0, y0, x1, y1 = rect
+    return (x >= x0) & (x < x1) & (y >= y0) & (y < y1)
+
+
+def _xy(xy_id: Column) -> tuple[Column, Column]:
+    """The quantized location (0.1 m bin) an xy_id encodes."""
+    return F.floor(xy_id / 10_000_000) / 10.0, F.pmod(xy_id, 10_000_000) / 10.0
+
+
+def _no_noise() -> Column:
+    """Every layer column is null (the location matched no polygon)."""
+    cond = None
+    for c in LAYER_NAMES:
+        cur = F.col(c).isNull()
+        cond = cur if cond is None else (cond & cur)
+    return cond
 
 
 def noise_final_samples(
@@ -80,129 +69,96 @@ def noise_final_samples(
     res: int = 7,
     ring_radius: float = 7.0,
     ring_count: int = 20,
-    salt: int = 1,
-    hot: DataFrame | None = None,
-    dedup_xy: bool = True,
     nodata_polys: DataFrame | None = None,
     nodata_res: int = 4,
-    fused_dedup: bool = True,
 ) -> DataFrame:
     """edges(edge_id, x1, y1, x2, y2, length) ×
     layers(layer, poly_id, minx, miny, maxx, maxy, db) →
     one row per edge sample with per-source dB, n_max, n_max_sources,
     n_max_adj (reference steps 3-11; input to the per-edge aggregate).
 
-    ``dedup_xy`` picks the physical strategy (results identical,
-    oracle-verified both ways):
-    - True — the reference's CSE: distinct quantized locations → PIP →
-      fan-out join back to samples. Right when the PIP is a SHUFFLE
-      join (layer table too big to broadcast): dedup shrinks the
-      expensive join's input ~2.4×.
-    - False — PIP every sample directly (at its quantized location, so
-      values per location stay identical) via the broadcast join, ONE
-      pivot keyed (edge_id, sample idx). Kills the distinct AND the
-      fan-out join. MEASURED on the street-edge workload (3 m sampling
-      → 2.4× co-located samples): dedup still wins (57-61 s vs
-      64-68 s at 4N/MULT=400) — the saved exchanges don't pay for the
-      2.4× extra refine work. Pick False only when sample locations
-      are mostly unique (dedup factor ≈ 1)."""
-    if not dedup_xy:
-        return _final_samples_nodedup(
-            edges, layers, nodata_rect, res, ring_radius, ring_count, salt, hot
-        )
+    One physical shape (each step oracle-pinned by the flagship
+    queries):
+    - ``location_exposures`` dedups the samples on xy_id AND pivots the
+      per-layer max in one broadcast cell-join + one groupBy(xy_id)
+      with map-side combine; every location is evaluated at its
+      QUANTIZED coordinates, so co-located samples share one value.
+    - the nodata zone is ``nodata_rect`` (native predicate) or, when
+      ``nodata_polys`` is given, a general geometry: an even-odd
+      ``pip_join_wkb`` semi-join flags the locations (the reference's
+      nodata layer is a municipal-boundary multipolygon,
+      noise_graph_join.py:41-47). ``nodata_res`` is coarse by default —
+      nodata zones are municipality-scale, so big cells keep the
+      cover linear.
+    - the miss branch (nodata AND no layer hit) recomputes its input
+      instead of caching the wide location table: a one-reuse cache of
+      it measured slower than the recompute (58.4 vs 47.9 s for the
+      full flagship, MULT=400, 4×2-core executors). For the rect, the
+      recompute explodes only the edges whose bbox (±0.1 m, covering
+      the 0.05 m quantization shift) meets the strip, and filters the
+      samples to the strip before the join; the OR-form edge predicate
+      pushes down to the parquet scan. For polygons it filters a full
+      recompute.
+    - the ring pivot is the same LEFT broadcast cell-join + one
+      aggregation (``_left_cell_pivot``); ``interp_vals`` has exactly
+      one row per miss location by construction (every miss point
+      spawns ring_count ring rows, the left join keeps them, both
+      groupBys keep keys), so no reassembly join follows it."""
     samples = with_xy_id(sample_edges(edges))
 
-    if fused_dedup and salt == 1 and hot is None and nodata_polys is None:
-        return _final_samples_fused_dedup(
-            samples, layers, nodata_rect, res, ring_radius, ring_count, edges=edges
-        )
-    uniq = unique_points(samples)
-
-    if nodata_polys is not None:
-        # general nodata GEOMETRY (the reference's nodata layer is a
-        # municipal-boundary multipolygon read from GeoPackage,
-        # noise_graph_join_test.py:90, noise_graph_join.py:41-47):
-        # even-odd PIP semi-join flags the unique sample locations.
-        # nodata_res is coarse by default — nodata zones are huge
-        # (municipality-scale), so big cells keep the cover linear.
+    if nodata_polys is None:
+        pts = _located(location_exposures(samples, layers, res), nodata_rect)
+    else:
         from hope_graph_builder_spark.operators.spatial_join import pip_join_wkb
 
+        pts = _located(location_exposures(samples, layers, res))
         flags = (
             pip_join_wkb(
-                uniq.select("xy_id", "x", "y"), nodata_polys,
+                pts.select("xy_id", "x", "y"), nodata_polys,
                 res=nodata_res, point_id="xy_id",
             )
             .select("xy_id").distinct()
             .withColumn("_nz", F.lit(True))
         )
-        uniq = uniq.join(flags, "xy_id", "left").withColumn(
+        pts = pts.join(flags, "xy_id", "left").withColumn(
             "nodata_zone", F.coalesce(F.col("_nz"), F.lit(False))
         ).drop("_nz")
-    else:
-        nx0, ny0, nx1, ny1 = nodata_rect
-        uniq = uniq.withColumn(
-            "nodata_zone",
-            (F.col("x") >= nx0) & (F.col("x") < nx1)
-            & (F.col("y") >= ny0) & (F.col("y") < ny1),
-        )
-
-    matches = pip_join_rect(
-        uniq, layers, res=res, how="inner", point_id="xy_id", salt=salt, hot=hot
-    ).select("xy_id", "layer", "db")
-    # pts feeds both the normal and the missing/kNN branches — persist
-    # so the sample→dedup→join→pivot prefix computes once
-    pts = _persist(uniq.join(pivot_layer_max(matches, "xy_id"), "xy_id", "left"))
-
-    no_noise = None
-    for c in LAYER_NAMES:
-        cond = F.col(c).isNull()
-        no_noise = cond if no_noise is None else (no_noise & cond)
-    pts = pts.withColumn("missing_noises", F.col("nodata_zone") & no_noise)
-
+    pts = pts.withColumn("missing_noises", F.col("nodata_zone") & _no_noise())
     normal = aggregate_noise_values(pts.filter(~F.col("missing_noises"))).select(*SAMPLE_COLS)
 
-    # Miss-branch input: missing ⇒ nodata_zone, so the second pass over
-    # the unpersisted pts lineage filters the (tiny) nodata strip BEFORE
-    # the PIP — a full-corpus PIP+pivot recompute becomes a strip-only
-    # one. pts.filter(missing) can't push this itself: the no_noise
-    # predicate needs the pivot's output. Identical rows by
-    # construction (oracle-pinned by the flagship queries). With the
-    # subtree persisted, reading the cache is cheaper than any
-    # recompute — then filter pts directly.
-    if os.environ.get("HGBS_PERSIST"):
-        miss = pts.filter(F.col("missing_noises")).select("xy_id", "x", "y")
-    else:
-        nod = uniq.filter(F.col("nodata_zone"))
-        nod_matches = pip_join_rect(
-            nod, layers, res=res, how="inner", point_id="xy_id", salt=salt, hot=hot
-        ).select("xy_id", "layer", "db")
-        nod_pts = nod.join(pivot_layer_max(nod_matches, "xy_id"), "xy_id", "left")
-        nod_no_noise = None
-        for c in LAYER_NAMES:
-            cond = F.col(c).isNull()
-            nod_no_noise = cond if nod_no_noise is None else (nod_no_noise & cond)
-        miss = nod_pts.filter(nod_no_noise).select("xy_id", "x", "y")
-    rings = ring_points(miss, radius=ring_radius, count=ring_count, keep=["xy_id"], index_col="ring_i")
-    if salt == 1 and hot is None:
-        # broadcastable layer side: LEFT cell-join + one aggregation
-        # replaces inner PIP → pivot → join-back (same values, one
-        # SortMergeJoin + exchange fewer — r06, oracle-pinned)
-        ring_pivot = _left_cell_pivot(rings, layers, res, keys=["xy_id", "ring_i"])
-    else:
-        ring_matches = pip_join_rect(
-            rings, layers, res=res, how="inner", point_id="xy_id", salt=salt, hot=hot
-        ).select("xy_id", "ring_i", "layer", "db")
-        ring_pivot = rings.select("xy_id", "ring_i").join(
-            pivot_layer_max(ring_matches, ["xy_id", "ring_i"]), ["xy_id", "ring_i"], "left"
+    if nodata_polys is None:
+        nx0, ny0, nx1, ny1 = nodata_rect
+        m = 0.1  # quantization moves a sample ≤0.05 m; margin 2×
+        pre = edges.filter(
+            ((F.col("x1") >= nx0 - m) | (F.col("x2") >= nx0 - m))
+            & ((F.col("x1") < nx1 + m) | (F.col("x2") < nx1 + m))
+            & ((F.col("y1") >= ny0 - m) | (F.col("y2") >= ny0 - m))
+            & ((F.col("y1") < ny1 + m) | (F.col("y2") < ny1 + m))
         )
+        strip = location_exposures(
+            with_xy_id(sample_edges(pre)), layers, res, strip=nodata_rect
+        )
+        miss = _located(strip, nodata_rect).filter(_no_noise())
+    else:
+        miss = pts.filter(F.col("missing_noises"))
+    rings = ring_points(miss.select("xy_id", "x", "y"), radius=ring_radius,
+                        count=ring_count, keep=["xy_id"], index_col="ring_i")
+    ring_pivot = _left_cell_pivot(rings, layers, res, keys=["xy_id", "ring_i"])
     interp_vals = interpolate_missing(ring_pivot, ring_count=ring_count)
-    # interp_vals carries exactly one row per miss key (rings preserve
-    # every miss point; both groupBys preserve keys), so the old
-    # ``miss ⟕ interp_vals`` reassembly join was the identity — dropped
     interp = aggregate_noise_values(interp_vals, prefer_syke=True).select(*SAMPLE_COLS)
 
     all_samples = normal.unionByName(interp)
     return samples.join(all_samples, "xy_id", "left")
+
+
+def _located(
+    exposures: DataFrame, nodata_rect: tuple[float, float, float, float] | None = None
+) -> DataFrame:
+    """location_exposures output + the x / y its xy_id encodes, and the
+    rect nodata flag when ``nodata_rect`` is given."""
+    x, y = _xy(F.col("xy_id"))
+    flag = [] if nodata_rect is None else [_in_rect(x, y, nodata_rect).alias("nodata_zone")]
+    return exposures.select("xy_id", x.alias("x"), y.alias("y"), *flag, *LAYER_NAMES)
 
 
 def _layer_index_col() -> F.Column:
@@ -226,11 +182,13 @@ def _left_cell_pivot(
     res_bump: int = 0,
 ) -> DataFrame:
     """LEFT broadcast cell-join + one grouped 8-way conditional max —
-    the fused PIP+pivot core shared by ``location_exposures`` and the
-    ring branch. Exactly one aggregation over a stream-static broadcast
-    join; unmatched points survive with all-null layer columns.
-    Value-identical to pip_join_rect(inner) → pivot_layer_max →
-    join-back (oracle-pinned), with zero join-backs.
+    the PIP+pivot core of ``location_exposures`` and the ring branch.
+    Exactly one aggregation over a stream-static broadcast join;
+    unmatched points survive with all-null layer columns, and stacked
+    (overlapping) polygons of one layer max-reduce (the reference's
+    invalid-overlap dedup-keep-max, utils.py:112-141). Deliberately
+    not ``.pivot()``: Spark's PivotFirst measured 8× slower than plain
+    max(CASE WHEN) on 32M match rows (33.5 vs 4.1 s).
 
     ``res_bump`` joins at a finer cell resolution than the caller's
     polygon-scale ``res`` — results are resolution-invariant (the exact
@@ -239,8 +197,17 @@ def _left_cell_pivot(
     candidate rows reach the aggregation (measured at bench scale:
     53M → 33M rows, 2.36 → 1.79 s for the big location pass) at the
     cost of ~4× cover rows on the (tiny, broadcast) polygon side.
-    Callers bump only when the point side is large; the cover explode
-    stays bounded by the split_by_cover_size valve upstream."""
+    Callers bump only when the point side is large.
+
+    Nothing here caps the broadcast cover: it holds one row per
+    (rect, cell its bbox meets) at ``res + res_bump``, so the layer
+    table and the caller's res bound it. The synthetic layers (4,109
+    rects of 3.6 km) cover 258,002 cells at res 8, the flagship's res
+    7 bumped, with at most 81 per rect. No flagship caller runs the
+    ``split_by_cover_size`` valve; a caller that feeds polygons of
+    unbounded extent must wire it in and size it at ``res + res_bump``,
+    the resolution the cover is exploded at — one bump quadruples a
+    polygon's cover."""
     from hope_graph_builder_spark.operators.spatial_join import (
         CELL,
         with_cover_cells,
@@ -287,8 +254,8 @@ def location_exposures(
 
     x / y are pure functions of xy_id, so they are NOT carried through
     the shuffle as first() buffers — callers re-derive them from xy_id
-    (measured: dropping the derivable columns trims the fused partial
-    rows ~19%, the one place this path out-shuffled the explicit one).
+    (measured: dropping the derivable columns trims the partial
+    aggregate rows ~19%).
 
     ``strip`` pre-filters samples to a rect BEFORE the join (the
     flagship's miss-branch recompute pushes the nodata filter down to
@@ -298,204 +265,13 @@ def location_exposures(
     legal Structured Streaming stage: streaming/noise_stream.py runs
     this same function over an edge STREAM and the test pins
     stream == batch equality."""
-    sq = samples.select(
-        "xy_id",
-        (F.floor(F.col("xy_id") / 10_000_000) / 10.0).alias("x"),
-        (F.pmod(F.col("xy_id"), 10_000_000) / 10.0).alias("y"),
-    )
+    x, y = _xy(F.col("xy_id"))
+    sq = samples.select("xy_id", x.alias("x"), y.alias("y"))
     if strip is not None:
-        nx0, ny0, nx1, ny1 = strip
-        sq = sq.filter(
-            (F.col("x") >= nx0) & (F.col("x") < nx1)
-            & (F.col("y") >= ny0) & (F.col("y") < ny1)
-        )
+        sq = sq.filter(_in_rect(F.col("x"), F.col("y"), strip))
     # the point side is corpus-sized here → join one res step finer
     # (fewer false candidates; see _left_cell_pivot docstring)
     return _left_cell_pivot(sq, layers, res, keys=["xy_id"], res_bump=1)
-
-
-def _final_samples_fused_dedup(
-    samples: DataFrame,
-    layers: DataFrame,
-    nodata_rect: tuple[float, float, float, float],
-    res: int,
-    ring_radius: float,
-    ring_count: int,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """Broadcast-PIP fast path: dedup + PIP + pivot in ONE shuffle.
-
-    The old shape was distinct(xy_id) → inner cell-join → groupBy
-    pivot → join-back (3 shuffles of xy_id-sized data). Here the raw
-    samples LEFT-cell-join the broadcast layer cover at their QUANTIZED
-    coordinates (identical evaluation points, so identical values) and
-    one groupBy(xy_id) with map-side combine is simultaneously the
-    dedup AND the per-layer max pivot; unmatched locations survive via
-    the left join. Measured at 4N/MULT=400: 42.5 → ~35 s end-to-end.
-    Only for the broadcast case — the salted/hot shuffle path and
-    polygon nodata keep the explicit-stage shape.
-
-    r06 miss-branch shape (guide §2.4 — remove shuffles outright; each
-    step oracle-pinned identical by the flagship queries):
-    - ``edges`` enables a bbox prefilter for the strip recompute: only
-      edges whose bbox (±0.1 m, covering the 0.05 m quantization shift)
-      intersects the nodata strip can yield strip samples, so the
-      recompute explodes a tiny fraction instead of every edge, and the
-      OR-form predicate pushes down to the parquet scan.
-    - the ring pivot is a LEFT broadcast cell-join + one aggregation
-      (``_left_cell_pivot``) instead of inner PIP → pivot → join-back
-      (removes one SortMergeJoin + exchange).
-    - ``interp_vals`` has exactly one row per ``miss`` key by
-      construction (every miss point spawns ring_count ring rows, the
-      left join preserves them, both groupBys preserve keys), so the
-      old ``miss ⟕ interp_vals`` reassembly join was the identity —
-      dropped (removes the second SortMergeJoin + exchange, and with
-      it 2 of the 3 strip recomputes of the whole sample explode)."""
-    nx0, ny0, nx1, ny1 = nodata_rect
-
-    def build_pts(strip_only: bool) -> DataFrame:
-        # miss-branch recompute (strip_only): the nodata filter pushes
-        # all the way down to the sample explode — and, when the raw
-        # edges are available, below it, to the edge scan itself
-        src = samples
-        if strip_only and edges is not None:
-            m = 0.1  # quantization moves a sample ≤0.05 m; margin 2×
-            pre = edges.filter(
-                ((F.col("x1") >= nx0 - m) | (F.col("x2") >= nx0 - m))
-                & ((F.col("x1") < nx1 + m) | (F.col("x2") < nx1 + m))
-                & ((F.col("y1") >= ny0 - m) | (F.col("y2") >= ny0 - m))
-                & ((F.col("y1") < ny1 + m) | (F.col("y2") < ny1 + m))
-            )
-            src = with_xy_id(sample_edges(pre))
-        agg = location_exposures(
-            src, layers, res, strip=nodata_rect if strip_only else None
-        )
-        x = (F.floor(F.col("xy_id") / 10_000_000) / 10.0)
-        y = (F.pmod(F.col("xy_id"), 10_000_000) / 10.0)
-        return agg.select(
-            "xy_id",
-            x.alias("x"),
-            y.alias("y"),
-            ((x >= nx0) & (x < nx1) & (y >= ny0) & (y < ny1)).alias("nodata_zone"),
-            *LAYER_NAMES,
-        )
-
-    def no_noise_pred() -> F.Column:
-        cond = None
-        for c in LAYER_NAMES:
-            cur = F.col(c).isNull()
-            cond = cur if cond is None else (cond & cur)
-        return cond
-
-    pts = _persist(build_pts(strip_only=False)).withColumn(
-        "missing_noises", F.col("nodata_zone") & no_noise_pred()
-    )
-    normal = aggregate_noise_values(pts.filter(~F.col("missing_noises"))).select(*SAMPLE_COLS)
-
-    if os.environ.get("HGBS_PERSIST"):
-        miss = pts.filter(F.col("missing_noises")).select("xy_id", "x", "y")
-    else:
-        miss = build_pts(strip_only=True).filter(no_noise_pred()).select("xy_id", "x", "y")
-    rings = ring_points(miss, radius=ring_radius, count=ring_count,
-                        keep=["xy_id"], index_col="ring_i")
-    ring_pivot = _left_cell_pivot(rings, layers, res, keys=["xy_id", "ring_i"])
-    interp_vals = interpolate_missing(ring_pivot, ring_count=ring_count)
-    interp = aggregate_noise_values(interp_vals, prefer_syke=True).select(*SAMPLE_COLS)
-
-    all_samples = normal.unionByName(interp)
-    return samples.join(all_samples, "xy_id", "left")
-
-
-def _final_samples_nodedup(
-    edges: DataFrame,
-    layers: DataFrame,
-    nodata_rect: tuple[float, float, float, float],
-    res: int,
-    ring_radius: float,
-    ring_count: int,
-    salt: int,
-    hot: DataFrame | None,
-) -> DataFrame:
-    """PIP-every-sample strategy (see noise_final_samples docstring).
-    Each sample is evaluated at its QUANTIZED location (xy_id bin
-    center) — exactly the coordinates the dedup path evaluates — so
-    per-location values, and therefore per-edge aggregates, are
-    identical. Salting is ignored: the layer side is broadcast here
-    (no shuffle to skew); use dedup_xy=True for the salted shuffle
-    path."""
-    from hope_graph_builder_spark.operators.spatial_join import (
-        CELL,
-        with_cover_cells,
-        with_point_cell,
-    )
-
-    samples = with_xy_id(sample_edges(edges, index_col="_si"))
-    s = samples.select(
-        "edge_id", "_si", "sample_len", "xy_id",
-        (F.floor(F.col("xy_id") / 10_000_000) / 10.0).alias("x"),
-        (F.pmod(F.col("xy_id"), 10_000_000) / 10.0).alias("y"),
-    )
-    nx0, ny0, nx1, ny1 = nodata_rect
-    s = s.withColumn(
-        "nodata_zone",
-        (F.col("x") >= nx0) & (F.col("x") < nx1) & (F.col("y") >= ny0) & (F.col("y") < ny1),
-    )
-    # LEFT cell-cover broadcast join keeps unmatched samples in-line
-    # (no separate match/join-back pass); refine becomes the match value
-    p = with_point_cell(s, "x", "y", res)
-    g = F.broadcast(with_cover_cells(layers, "minx", "miny", "maxx", "maxy", res))
-    cand = p.join(g, CELL, "left")
-    hit = (
-        (F.col("x") >= F.col("minx")) & (F.col("x") < F.col("maxx"))
-        & (F.col("y") >= F.col("miny")) & (F.col("y") < F.col("maxy"))
-    )
-    rows = cand.select(
-        "edge_id", "_si", "sample_len", "xy_id", "x", "y", "nodata_zone",
-        F.when(hit, F.col("layer")).alias("layer"),
-        F.when(hit, F.col("db")).alias("db"),
-    )
-    pts = rows.groupBy("edge_id", "_si").agg(
-        F.first("sample_len").alias("sample_len"),
-        F.first("xy_id").alias("xy_id"),
-        F.first("x").alias("x"),
-        F.first("y").alias("y"),
-        F.first("nodata_zone").alias("nodata_zone"),
-        *[F.max(F.when(F.col("layer") == c, F.col("db"))).alias(c) for c in LAYER_NAMES],
-    )
-
-    no_noise = None
-    for c in LAYER_NAMES:
-        cond = F.col(c).isNull()
-        no_noise = cond if no_noise is None else (no_noise & cond)
-    pts = pts.withColumn("missing_noises", F.col("nodata_zone") & no_noise)
-    pts = _persist(pts)
-
-    carry = ["edge_id", "_si", "sample_len", "xy_id"]
-    normal = aggregate_noise_values(pts.filter(~F.col("missing_noises"))).select(
-        *carry, *SAMPLE_COLS[1:]
-    )
-
-    miss = pts.filter(F.col("missing_noises")).select(*carry, "x", "y")
-    rings = ring_points(
-        miss, radius=ring_radius, count=ring_count,
-        keep=["edge_id", "_si"], index_col="ring_i",
-    )
-    ring_matches = pip_join_rect(
-        rings, layers, res=res, how="inner", point_id="ring_i"
-    ).select("edge_id", "_si", "ring_i", "layer", "db")
-    ring_pivot = rings.select("edge_id", "_si", "ring_i").join(
-        pivot_layer_max(ring_matches, ["edge_id", "_si", "ring_i"]),
-        ["edge_id", "_si", "ring_i"],
-        "left",
-    )
-    interp_vals = interpolate_missing(
-        ring_pivot, ring_count=ring_count, key=["edge_id", "_si"]
-    )
-    interp = aggregate_noise_values(
-        miss.join(interp_vals, ["edge_id", "_si"], "left"), prefer_syke=True
-    ).select(*carry, *SAMPLE_COLS[1:])
-
-    return normal.unionByName(interp).drop("_si")
 
 
 def run_noise_join(
@@ -505,17 +281,17 @@ def run_noise_join(
     res: int = 7,
     ring_radius: float = 7.0,
     ring_count: int = 20,
-    salt: int = 1,
-    hot: DataFrame | None = None,
     extent_rect: tuple[float, float, float, float] | None = None,
-    dedup_xy: bool = True,
     nodata_polys: DataFrame | None = None,
     nodata_res: int = 4,
-    fused_dedup: bool = True,
     extent_polys: list | None = None,
+    dedup_xy: bool = True,
+    fused_dedup: bool = True,
 ) -> DataFrame:
     """Full flagship: → edge_noises(edge_id, noises map, noise_source,
-    noise_sources map).
+    noise_sources map). The per-sample stage is
+    ``noise_final_samples``; ``nodata_polys`` / ``nodata_res`` pass
+    through to it.
 
     ``extent_rect`` enables the J3 three-valued semantics (reference
     noise_graph_update.py:36-44, gpd.sjoin op='within'): edges whose
@@ -531,15 +307,16 @@ def run_noise_join(
     boundary crossing (``segments_within_rings``), which differs from
     the endpoint-only predicate exactly when a segment exits and
     re-enters a concave region. Mutually exclusive with
-    ``extent_rect``."""
-    if nodata_polys is not None and not dedup_xy:
-        raise ValueError("nodata_polys requires the dedup_xy=True strategy")
+    ``extent_rect``.
+
+    ``dedup_xy`` and ``fused_dedup`` are accepted and ignored: they
+    once chose between physical strategies of which only the fused
+    dedup remains (bench.py still passes them)."""
     if extent_rect is not None and extent_polys is not None:
         raise ValueError("pass extent_rect OR extent_polys, not both")
     final = noise_final_samples(
-        edges, layers, nodata_rect, res, ring_radius, ring_count, salt, hot,
-        dedup_xy=dedup_xy, nodata_polys=nodata_polys, nodata_res=nodata_res,
-        fused_dedup=fused_dedup,
+        edges, layers, nodata_rect, res, ring_radius, ring_count,
+        nodata_polys=nodata_polys, nodata_res=nodata_res,
     )
     # SLIM all-numeric projection into the fused single-pass edge
     # aggregate: ONE exchange for the entire tail (the old 2-pass +
@@ -559,13 +336,11 @@ def run_noise_join(
             edges_all=edges_within_rings(edges, extent_polys),
             extent_flag="in_extent",
         )
-    ex0, ey0, ex1, ey1 = extent_rect
-    inside = lambda x, y: (  # noqa: E731
-        (F.col(x) >= ex0) & (F.col(x) < ex1) & (F.col(y) >= ey0) & (F.col(y) < ey1)
-    )
     # within(convex rect) ⇔ both endpoints inside (see docstring)
     edges_flagged = edges.select(
-        "edge_id", (inside("x1", "y1") & inside("x2", "y2")).alias("in_extent")
+        "edge_id",
+        (_in_rect(F.col("x1"), F.col("y1"), extent_rect)
+         & _in_rect(F.col("x2"), F.col("y2"), extent_rect)).alias("in_extent"),
     )
     # (edges_flagged is the preserved side of the left join, so it
     # cannot be broadcast; it re-shuffles on edge_id — extent mode only)

@@ -6,6 +6,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_TINY = "/root/testdata/sf0.001"
+SF_SMALL = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="session")

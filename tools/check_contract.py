@@ -27,6 +27,31 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def compare(sp: pd.DataFrame, du: pd.DataFrame) -> list[str]:
+    """Spark result vs DuckDB oracle result: column names, row count,
+    then sorted values column by column (NULL == NULL, floats exact).
+    Returns the mismatches found; empty means equal."""
+    a, b = norm(sp), norm(du)
+    if list(a.columns) != list(b.columns):
+        return [f"COLUMN MISMATCH {list(a.columns)} vs {list(b.columns)}"]
+    if len(a) != len(b):
+        return [f"ROWCOUNT MISMATCH spark={len(a)} duck={len(b)}"]
+    errs = []
+    for c in a.columns:
+        av, bv = a[c].to_numpy(), b[c].to_numpy()
+        if av.dtype.kind == "f" or bv.dtype.kind == "f":
+            eq = (pd.isna(av) & pd.isna(bv)) | (av == bv)
+        else:
+            eq = (pd.Series(av).astype(object).where(~pd.isna(av), None)
+                  == pd.Series(bv).astype(object).where(~pd.isna(bv), None)).to_numpy()
+            eq = eq | (pd.isna(av) & pd.isna(bv))
+        if not eq.all():
+            bad = int((~eq).sum())
+            i = int(np.argmax(~eq))
+            errs.append(f"VALUE MISMATCH col={c} nbad={bad} e.g. row {i}: {av[i]!r} vs {bv[i]!r}")
+    return errs
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -62,34 +87,13 @@ def main() -> None:
         if name not in oracles:
             print(f"{name}: rows-only check, rows={len(sp)}")
             continue
-        du = con.sql(oracles[name]).df()
-        a, b = norm(sp), norm(du)
-        if list(a.columns) != list(b.columns):
-            print(f"{name}: COLUMN MISMATCH {list(a.columns)} vs {list(b.columns)}")
+        errs = compare(sp, con.sql(oracles[name]).df())
+        for e in errs:
+            print(f"{name}: {e}")
+        if errs:
             failed.append(name)
-            continue
-        if len(a) != len(b):
-            print(f"{name}: ROWCOUNT MISMATCH spark={len(a)} duck={len(b)}")
-            failed.append(name)
-            continue
-        ok = True
-        for c in a.columns:
-            av, bv = a[c].to_numpy(), b[c].to_numpy()
-            if av.dtype.kind == "f" or bv.dtype.kind == "f":
-                eq = (pd.isna(av) & pd.isna(bv)) | (av == bv)
-            else:
-                eq = (pd.Series(av).astype(object).where(~pd.isna(av), None)
-                      == pd.Series(bv).astype(object).where(~pd.isna(bv), None)).to_numpy()
-                eq = eq | (pd.isna(av) & pd.isna(bv))
-            if not eq.all():
-                bad = int((~eq).sum())
-                i = int(np.argmax(~eq))
-                print(f"{name}: VALUE MISMATCH col={c} nbad={bad} e.g. row {i}: {av[i]!r} vs {bv[i]!r}")
-                ok = False
-        if ok:
-            print(f"{name}: OK rows={len(a)}")
         else:
-            failed.append(name)
+            print(f"{name}: OK rows={len(sp)}")
 
     if failed:
         print("FAILED:", failed)

@@ -1,27 +1,12 @@
-#!/usr/bin/env python
-"""Quantify the fused-dedup flagship's shuffle savings with executor
-metrics, not plan-reading: run the flagship both ways (explicit-stage
-dedup vs fused) in ONE session and report per-variant shuffle
-read/write bytes and records from the AppStatusStore (works with
-spark.ui.enabled=false — the AppStatusListener always populates it).
-
-Prints one JSON line:
-  {"mult": M, "variants": {"explicit": {...}, "fused": {...}},
-   "write_bytes_saved_pct": P}
-
-Usage:  python tools/shuffle_audit.py            # MULT=100, sf0.1
-        SPARK_GRAFT_MULT=400 python tools/shuffle_audit.py
+"""Executor shuffle metrics read from the AppStatusStore, not from
+plan text (works with spark.ui.enabled=false — the AppStatusListener
+always populates it): ``all_stages`` lists every stage the session has
+seen and ``stage_totals`` sums their shuffle bytes, records and run
+time, so a caller diffs two snapshots around the work it measures
+(tools/fetch_audit.py does).
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
 
 def all_stages(spark):
@@ -47,56 +32,3 @@ def stage_totals(spark) -> dict[str, int]:
         tot["executor_run_ms"] += st.executorRunTime()
         tot["stages"] += 1
     return tot
-
-
-def main() -> None:
-    from pyspark.sql import functions as F
-
-    from hope_graph_builder_spark import synth
-    from hope_graph_builder_spark.pipelines.noise_join import run_noise_join
-    from hope_graph_builder_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    mult = int(os.environ.get("SPARK_GRAFT_MULT", "100"))
-    spark = get_spark(app="shuffle_audit")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    layers = synth.noise_layers(spark)
-    cache = f"/dev/shm/bench_inputs/{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_m{mult}/edges"
-    if os.path.exists(cache + "/_SUCCESS"):
-        edges = spark.read.parquet(cache)
-    else:
-        edges = synth.page_edges_dense(spark, sf_dir, mult).localCheckpoint()
-
-    def consume(df):
-        df.agg(
-            F.bit_xor(F.xxhash64(F.to_json(F.struct(*df.columns)))).alias("x"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()
-
-    # warm-up both shapes once so codegen/JIT does not skew timings
-    tiny = edges.limit(2000).localCheckpoint()
-    for fused in (False, True):
-        consume(run_noise_join(tiny, layers, synth.NODATA_RECT, res=7, fused_dedup=fused))
-
-    out: dict = {"mult": mult, "sf_dir": sf_dir, "variants": {}}
-    for name, fused in (("explicit", False), ("fused", True)):
-        before = stage_totals(spark)
-        t0 = time.time()
-        consume(run_noise_join(edges, layers, synth.NODATA_RECT, res=7, fused_dedup=fused))
-        wall = time.time() - t0
-        after = stage_totals(spark)
-        out["variants"][name] = {
-            k: after[k] - before[k] for k in before
-        } | {"wall_sec": round(wall, 3)}
-
-    e = out["variants"]["explicit"]["shuffle_write_bytes"]
-    f_ = out["variants"]["fused"]["shuffle_write_bytes"]
-    out["write_bytes_saved_pct"] = round(100.0 * (e - f_) / e, 1) if e else None
-    spark.stop()
-    print(json.dumps(out), flush=True)
-    os._exit(0)
-
-
-if __name__ == "__main__":
-    main()
