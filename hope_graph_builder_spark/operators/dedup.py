@@ -40,11 +40,18 @@ def _hasher(method: str):
       oracle replays; ~16 md5+base-conversions per shingle make it
       the expensive verification mode (measured ~4 ms/doc/core on the
       bench corpus).
-    - 'xx': native xxhash64 — one JVM hash per (shingle, salt),
-      measured ~10× cheaper; semantics identical up to the hash
-      family (exact duplicates still collide in every band), but NOT
-      replayable in DuckDB — production mode, verified by pytest
-      equivalence-on-exact-dups rather than by oracle."""
+    - 'xx': native xxhash64, measured ~10× cheaper; semantics
+      identical up to the hash family (exact duplicates still collide
+      in every band), but NOT replayable in DuckDB — production mode,
+      verified by pytest equivalence-on-exact-dups rather than by
+      oracle. This returns the per-string hash; the MinHash signature
+      (minhash_signature) hashes each shingle string ONCE and derives
+      its k rows by a fixed-width rehash of that 8-byte base hash
+      (xxhash64(h, j)), not by k string-salted hashes per shingle.
+      That r06 scheme changed the xx signature family: xx signatures
+      persisted before r06 are incompatible with new ones (compare or
+      band them only against signatures of the same vintage); the
+      md5 mode is unchanged."""
     if method == "md5":
         return hash60
     if method == "xx":
@@ -552,8 +559,9 @@ def _dup_flagged(
 
     r06 shape: ONE evaluation of the explode+hash subtree and ONE
     h-keyed exchange — a corpus-count window (count(*) over
-    partitionBy(h), sort-based, safe for 10⁸-occurrence hot hashes:
-    no per-key state) replaces groupBy(h)→filter→re-evaluate wins→
+    partitionBy(h), sort-based; a hot hash's whole peer group lands in
+    one task and is buffered, spillably — see dup_substring_spans)
+    replaces groupBy(h)→filter→re-evaluate wins→
     equi-join, which evaluated the dominant explode+hash pass twice
     and shuffled it twice (measured A/B at m50/16 cores: 6.2-6.7 s →
     4.3-4.4 s for the flagged subtree, identical output). The old
@@ -619,13 +627,16 @@ def dup_substring_spans(
     collisions; production mode, pytest-equivalence-verified).
 
     100 TB shape: this operator's cost is inherent to exact-substring
-    dedup — one row per sampled position. All heavy stages partially
-    aggregate map-side: window hashes → groupBy(hash) count (a window
-    repeated 10⁸ times collapses per input partition before the
-    shuffle), flagged hashes re-attach by equi-join, and span merging
-    is a per-document window (lag → island cumsum → two groupBys) that
-    shuffles only the FLAGGED positions — on clean corpora a small
-    fraction of the input."""
+    dedup — one row per sampled position. The positions are flagged
+    by a corpus-wide ``count(*)`` window over ``partitionBy(h)``
+    (_dup_flagged): one h-keyed exchange of every (id, pos, h) row,
+    with no map-side combine and no re-attach join. Each hash's rows
+    land in one task, which sorts them and buffers the whole peer
+    group to count it (spillable, so no OOM): a boilerplate window
+    repeated 10⁸ times is one straggler task sorting and spilling
+    10⁸ rows. Span merging is then a per-document window (lag →
+    island cumsum → two groupBys) that shuffles only the FLAGGED
+    positions — on clean corpora a small fraction of the input."""
     from pyspark.sql.window import Window as W
 
     _, flagged = _dup_flagged(df, k, stride, text_col, id_col, hash_method)
@@ -701,9 +712,8 @@ def strip_dup_spans(
     ``stride`` > 1 the spans are the sampled-grid approximation the
     audit documents (runs ≥ k + stride - 1 still guaranteed caught).
 
-    Scale shape: the audit's stages (map-side-combining groupBy(hash),
-    shuffle-hash flag join, per-doc island window over FLAGGED
-    positions only) plus one per-doc span list (collect_list over
+    Scale shape: the audit's stages (the count-over-partitionBy(h)
+    flag window, per-doc island window over FLAGGED positions only) plus one per-doc span list (collect_list over
     n_spans rows — bounded by doc length / k) and one id-equi join
     back to the corpus. The surgery itself is a native ``aggregate``
     fold over the span array (substring concatenation — no UDF, no

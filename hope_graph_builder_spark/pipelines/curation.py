@@ -14,8 +14,9 @@ rand()), so the emitted shard files are byte-reproducible across
 runs/retries — the corpus-lineage property the individual operators
 were built for, demonstrated end to end.
 
-Scale shape: two map scans over the corpus (signals + gopher battery),
-one id-equi join to apply the gate, then the operators' own exchanges —
+Scale shape: one map scan over the corpus (gopher battery and the
+quality/token signals on one projection, the gate as a filter), the
+gated set materialized once, then the operators' own exchanges —
 quota_cap's bucketed rank (giant-source sort never materializes),
 pack's two-phase prefix sum (no global-order window), chunking as a
 pure map stage, and the shard writer's own hash layout. Everything
@@ -23,8 +24,6 @@ downstream of the gate runs on the (much smaller) kept set.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -89,26 +88,21 @@ def run_corpus_curation(
             textops.token_count(t).cast("long").alias("n_tokens"),
         )
     )
-    if os.environ.get("HGBS_CURATION_CKPT", "1") not in ("0", "false"):
-        # The two-phase operators downstream each consume their input
-        # twice (counts + rank join; totals + prefix window), so the
-        # lazy plan re-evaluates this subtree — and the whole Gopher
-        # battery text scan inside it — up to 4×. A LAZY localCheckpoint
-        # materializes the gated set once per job (MEMORY_AND_DISK on
-        # executors, torn down with the session — within-job reuse, not
-        # cross-run caching) and truncates the recompute tree. At
-        # 100 TB this writes the (post-gate, much smaller) kept set
-        # once to executor-local storage — the standard price of a
-        # multi-consumer subtree (guide §5); HGBS_CURATION_CKPT=0
-        # restores full lineage recompute.
-        gated = gated.localCheckpoint(eager=False)
+    # The two-phase operators downstream each consume their input twice
+    # (counts + rank join; totals + prefix window), so the lazy plan
+    # would re-evaluate this subtree — and the whole Gopher battery text
+    # scan inside it — up to 4×. A LAZY localCheckpoint materializes the
+    # gated set once per job and truncates the recompute tree; at 100 TB
+    # it writes the (post-gate, much smaller) kept set once to
+    # executor-local storage. The policy and its executor-loss failure
+    # mode are written once, at pipelines/webtext._signals.
+    gated = gated.localCheckpoint(eager=False)
     capped = quota_cap(
         gated, quota_per_source, by=by, id_col=id_col, salt=salt
     )
-    if os.environ.get("HGBS_CURATION_CKPT", "1") not in ("0", "false"):
-        # same multi-consumer argument one stage later: pack reads
-        # capped twice, chunking reads pack's output once more
-        capped = capped.localCheckpoint(eager=False)
+    # same multi-consumer argument one stage later: pack reads capped
+    # twice, chunking reads pack's output once more
+    capped = capped.localCheckpoint(eager=False)
     packed = pack_token_budget(
         capped, token_budget, tokens_col="n_tokens", quality_col="quality",
         id_col=id_col,

@@ -3,17 +3,19 @@
 PostGIS ST_Intersects join of 30 m edge buffers × vegetation polygons,
 ST_Intersection + per-edge dissolve, share = veg_area / buffer_area.
 
-Re-expression: cell-cover equi-join prefilter + exact rectangle
-intersection areas (native arithmetic). Two paths:
+Re-expression: cell-cover equi-join prefilter + exact intersection
+areas. Three paths:
 
 - ``overlay_share_rect``: axis-aligned buffers/polygons → closed-form
   intersection area, micro-quantized (floor(area·10⁶) int) so the
   per-edge SUM is order-independent and oracle-exact. Requires
   non-overlapping polygons within a class (the dissolve is then a
   plain sum — our synthetic veg grid guarantees it).
-- ``overlay_share_convex``: general convex polygons via the
-  Sutherland–Hodgman kernel in an Arrow-batched pandas UDF (the
-  ST_Intersection twin for non-rectangular geometry).
+- ``overlay_share_general``: concave, holed and multipart polygons
+  (WKB) via the signed-fan × Sutherland–Hodgman kernel in an
+  Arrow-batched pandas UDF (the ST_Intersection twin for
+  non-rectangular geometry).
+- ``overlay_share_round``: exact round-cap capsule buffers.
 """
 
 from __future__ import annotations
@@ -29,14 +31,11 @@ from hope_graph_builder_spark.operators.spatial_join import with_cover_cells, CE
 from hope_graph_builder_spark.spatial import cell_id_expr
 from hope_graph_builder_spark.spatial.kernels import (
     clip_area_rings,
-    clip_polygon_convex,
     rect_union_area,
     rect_union_parts,
-    shoelace_area,
 )
 from hope_graph_builder_spark.spatial.wkb import (
     multipolygon_from_wkb,
-    polygon_from_wkb,
     rect_to_wkb,
 )
 
@@ -277,65 +276,6 @@ def dissolve_union_geometry_general(
     return polys.groupBy(*group_cols).applyInPandas(fn, schema=schema)
 
 
-def overlay_share_convex(
-    edges: DataFrame, polys: DataFrame, res: int = 8, dist: float = 30.0,
-    geom: str = "geom",
-) -> DataFrame:
-    """General convex-polygon overlay: candidates by cell cover, exact
-    intersection area via Sutherland–Hodgman inside mapInPandas
-    (the pandas-UDF path; polys carry WKB + bbox)."""
-    b = edge_buffer_rect(edges, dist)
-    bc = with_cover_cells(
-        b.select("edge_id", "bminx", "bminy", "bmaxx", "bmaxy", "buf_area"),
-        "bminx", "bminy", "bmaxx", "bmaxy", res,
-    )
-    vc = with_cover_cells(polys, "minx", "miny", "maxx", "maxy", res)
-    # same canonical-cell ownership trick as overlay_share_rect: the
-    # bbox-intersection min corner picks ONE joined cell per pair — a
-    # codegen filter instead of a .distinct() shuffle, and the exact
-    # clip kernel then runs once per pair
-    canon = cell_id_expr(
-        F.greatest(F.col("bminx"), F.col("minx")),
-        F.greatest(F.col("bminy"), F.col("miny")),
-        res,
-    )
-    cand = (
-        bc.join(vc, CELL, "inner")
-        .filter(F.col(CELL) == canon)
-        .select("edge_id", "veg_class", "poly_id", geom,
-                "bminx", "bminy", "bmaxx", "bmaxy", "buf_area")
-    )
-
-    def clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            areas = np.zeros(len(pdf))
-            for i, (buf, x0, y0, x1, y1) in enumerate(
-                zip(pdf[geom], pdf.bminx, pdf.bminy, pdf.bmaxx, pdf.bmaxy)
-            ):
-                ring = polygon_from_wkb(buf)
-                rect = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
-                out = clip_polygon_convex(ring[:-1], rect)
-                areas[i] = shoelace_area(out) if len(out) >= 3 else 0.0
-            yield pd.DataFrame(
-                {
-                    "edge_id": pdf.edge_id,
-                    "veg_class": pdf.veg_class,
-                    "area": areas,
-                    "buf_area": pdf.buf_area,
-                }
-            )
-
-    inter = cand.mapInPandas(
-        clip, schema="edge_id long, veg_class string, area double, buf_area double"
-    )
-    return (
-        inter.filter(F.col("area") > 0)
-        .withColumn("area_q", F.floor(F.col("area") * F.lit(AREA_Q)).cast("long"))
-        .groupBy("edge_id", "veg_class")
-        .agg(((F.sum("area_q") / F.lit(AREA_Q)) / F.min("buf_area")).alias("share"))
-    )
-
-
 def overlay_share_general(
     edges: DataFrame, polys: DataFrame, res: int = 8, dist: float = 30.0,
     geom: str = "geom", area_q: float = AREA_Q,
@@ -344,13 +284,12 @@ def overlay_share_general(
     exact ST_Intersection-area twin for the reference's real land-cover
     layers (arbitrary multipart polygons fetched at
     `fetch_land_cover.py:79-94`, intersected with no convexity
-    assumption at `land_cover_overlay_analysis.py:87-143`). Same plan
-    shape as ``overlay_share_convex`` — cell-cover candidates, one
-    canonical-cell codegen filter, one Arrow-batched kernel pass, one
-    groupBy — only the per-pair kernel changes: signed fan
-    decomposition × Sutherland–Hodgman (``clip_area_rings``), so
-    concavity and holes cost O(#vertices) triangles per pair, not a
-    new shuffle.
+    assumption at `land_cover_overlay_analysis.py:87-143`). Plan:
+    cell-cover candidates, one canonical-cell codegen filter, one
+    Arrow-batched kernel pass, one groupBy. The per-pair kernel is
+    signed fan decomposition × Sutherland–Hodgman
+    (``clip_area_rings``), so concavity and holes cost O(#vertices)
+    triangles per pair, not a new shuffle.
 
     Quantization uses round-to-NEAREST at ``area_q`` units/m² (not the
     rect path's floor): the general kernel's Σ-of-triangle float error

@@ -11,10 +11,15 @@ text-analysis as first-class stages over the mandated pages table):
       → keep = canonical ∧ quality gate ∧ repetition gate
 
 Every stage is an existing oracle-checked operator; this module owns
-only the composition. Plan shape at 100 TB: two map scans (extract /
-signals fuse into one), the trigram explode + broadcast-profile join,
-the LSH banding shuffle, the sparse component iteration, and one
-label-attach join plus one per-cluster window.
+only the composition. The per-doc prefix (``_signals``), the signal
+expressions (``signal_columns``) and the canonical-keep window
+(``_canonical_keep``) are each written once and shared by the batch
+form, the manifest-backed resumable form and the stream
+(streaming/webtext_stream). Plan shape at 100 TB: one extraction
+scan, materialized once for all its consumers (see ``_signals``), the
+trigram explode + broadcast-profile join, the LSH banding shuffle,
+the sparse component iteration, and one label-attach join plus one
+per-cluster window.
 
 Canonical selection is QUALITY-FIRST (v2): each cluster keeps its
 best member — repetition-gate pass first, then highest quality, then
@@ -26,17 +31,97 @@ member failed the gate).
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from pyspark.sql import SparkSession
 
 from hope_graph_builder_spark.operators import text as textops
 from hope_graph_builder_spark.operators.dedup import dedup_clusters
 from hope_graph_builder_spark.operators.extract import extract_text
+
+# the product columns between id and keep, in output order
+_OUT_COLS = ("url", "lang_pred", "quality", "n_tokens", "rep_pass", "cluster_id")
+
+
+def signal_columns(text: Column, toks: Column) -> list[Column]:
+    """``quality``, ``n_tokens``, ``rep_pass`` of ``text``, given its
+    lowered token array ``toks`` (textops._lower_tokens) HOISTED into
+    its own column: the repetition n-grams over an inline split are
+    O(tokens²) (measured engine trap); size(toks) == token_count
+    (lowercasing keeps boundaries)."""
+    return [
+        F.bround(textops.quality_score(text), 6).alias("quality"),
+        F.size(toks).cast("long").alias("n_tokens"),
+        textops.repetition_flags_from(toks).alias("rep_pass"),
+    ]
+
+
+def _signals(
+    pages: DataFrame,
+    id_col: str,
+    profiles: DataFrame | None,
+    keep_text: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The per-document prefix → ``(ex, sig)``: ``ex`` = (id, url,
+    extracted_text[, lang]) and ``sig`` = (id, url[, extracted_text],
+    quality, n_tokens, rep_pass, lang_pred). Profiles self-train on the
+    labeled ``lang`` rows of ``ex`` when none are given.
+
+    Materialization policy (the one place it is decided; curation
+    follows it): the extracted corpus feeds 3-5 consumers (profile
+    training, lang prediction, the signal scan, MinHash clustering, the
+    LM score), so a LAZY ``localCheckpoint`` materializes it once per
+    job instead of re-running the HTML→text scan per consumer —
+    measured 3.9× on the webtext bench (curation's two fan-outs: 2.3×).
+    It is within-job reuse on executor-local storage (MEMORY_AND_DISK),
+    torn down with the session, not cross-run caching. It truncates
+    lineage: losing an executor loses its checkpointed blocks, which
+    cannot be recomputed, so the job fails instead of retrying the
+    lost tasks. The reliable path for long jobs is the manifest-backed
+    resumable form (run_webtext_ingest_checkpointed): its stages
+    commit buckets to parquet, and a rerun after any failure restarts
+    from the committed buckets."""
+    ex = extract_text(pages).select(
+        id_col, "url", F.col("extracted_text"),
+        *([] if profiles is not None else [F.col("lang")]),
+    ).localCheckpoint(eager=False)
+    if profiles is None:
+        profiles = textops.train_lang_profiles(
+            ex.filter(F.col("lang").isNotNull()), text="extracted_text", lang="lang"
+        )
+    lang = textops.lang_pred_ngram(
+        ex, profiles, text="extracted_text", id_col=id_col, out="lang_pred"
+    )
+    t = F.col("extracted_text")
+    sig = ex.withColumn("_toks", textops._lower_tokens(t)).select(
+        id_col,
+        "url",
+        *(["extracted_text"] if keep_text else []),
+        *signal_columns(t, F.col("_toks")),
+    ).join(lang, id_col)
+    return ex, sig
+
+
+def _canonical_keep(
+    df: DataFrame, id_col: str, quality_min: float, gate: Column
+) -> DataFrame:
+    """``df`` + ``keep``: the best member of each ``cluster_id``
+    (rep_pass ≻ quality ≻ lowest id) that clears the quality and
+    repetition gates and the caller's extra ``gate``."""
+    w = Window.partitionBy("cluster_id").orderBy(
+        F.desc("rep_pass"), F.desc("quality"), F.asc(id_col)
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .withColumn(
+            "keep",
+            (F.col("_rn") == 1)
+            & (F.col("quality") >= F.lit(float(quality_min)))
+            & F.col("rep_pass")
+            & gate,
+        )
+        .drop("_rn")
+    )
 
 
 def run_webtext_ingest(
@@ -74,37 +159,7 @@ def run_webtext_ingest(
     the LM gates the final keep, it does not re-rank duplicates."""
     if (lm is None) != (lm_max_nll is None):
         raise ValueError("lm and lm_max_nll must be provided together")
-    ex = extract_text(pages).select(
-        id_col, "url", F.col("extracted_text"),
-        *([] if profiles is not None else [F.col("lang")]),
-    )
-    if os.environ.get("HGBS_WEBTEXT_CKPT", "1") not in ("0", "false"):
-        # the extracted corpus feeds 3-4 consumers (profile training,
-        # lang prediction, the signal scan, MinHash clustering) — a
-        # LAZY localCheckpoint materializes the extraction once per job
-        # instead of re-running the HTML→text scan per consumer
-        # (within-job reuse on executor-local storage, torn down with
-        # the session — not cross-run caching). HGBS_WEBTEXT_CKPT=0
-        # restores full lineage recompute.
-        ex = ex.localCheckpoint(eager=False)
-    if profiles is None:
-        profiles = textops.train_lang_profiles(
-            ex.filter(F.col("lang").isNotNull()), text="extracted_text", lang="lang"
-        )
-    lang = textops.lang_pred_ngram(
-        ex, profiles, text="extracted_text", id_col=id_col, out="lang_pred"
-    )
-    t = F.col("extracted_text")
-    # hoist the lowered token array once per row: the repetition
-    # n-grams over an inline split are O(tokens²) (measured engine
-    # trap); size(_toks) == token_count (lowercasing keeps boundaries)
-    sig = ex.withColumn("_toks", textops._lower_tokens(t)).select(
-        id_col,
-        "url",
-        F.bround(textops.quality_score(t), 6).alias("quality"),
-        F.size("_toks").cast("long").alias("n_tokens"),
-        textops.repetition_flags_from(F.col("_toks")).alias("rep_pass"),
-    ).join(lang, id_col)
+    ex, sig = _signals(pages, id_col, profiles)
     clusters = dedup_clusters(
         ex.select(id_col, F.col("extracted_text").alias("text")), id_col=id_col,
         hash=minhash_hash,
@@ -121,23 +176,8 @@ def run_webtext_ingest(
         lm_gate = F.coalesce(
             F.col("avg_nll") <= F.lit(float(lm_max_nll)), F.lit(False)
         )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("rep_pass"), F.desc("quality"), F.asc(id_col)
-    )
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .withColumn(
-            "keep",
-            (F.col("_rn") == 1)
-            & (F.col("quality") >= F.lit(float(quality_min)))
-            & F.col("rep_pass")
-            & lm_gate,
-        )
-        .drop("_rn")
-        .select(
-            id_col, "url", "lang_pred", "quality", "n_tokens",
-            "rep_pass", "cluster_id", *extra_cols, "keep",
-        )
+    return _canonical_keep(out, id_col, quality_min, lm_gate).select(
+        id_col, *_OUT_COLS, *extra_cols, "keep"
     )
 
 
@@ -170,6 +210,8 @@ def run_webtext_ingest_checkpointed(
       keys a fresh stage-2 namespace and recomputes the global
       fixpoint instead of mixing stale cluster labels.
 
+    Clustering uses the md5 MinHash and there is no LM gate.
+
     Profile training (when ``profiles`` is None) runs on the raw
     labeled pages — deterministic on the full input, so resume runs
     reproduce identical predictions — on resume the INPUT must be the
@@ -178,37 +220,17 @@ def run_webtext_ingest_checkpointed(
     ``profiles`` when in doubt). Returns both stages' counters plus
     ``final_stage``; read the product with
     checkpoint.manifest.read_stage(spark, root, result['final_stage'])."""
-    from hope_graph_builder_spark.checkpoint.manifest import read_stage, run_stage
+    from hope_graph_builder_spark.checkpoint.manifest import (
+        read_manifest,
+        read_stage,
+        run_stage,
+    )
 
+    _, sig = _signals(pages, id_col, profiles, keep_text=True)
     bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(buckets))
-    ex = extract_text(pages).select(
-        id_col, "url", F.col("extracted_text"),
-        *([] if profiles is not None else [F.col("lang")]),
-    )
-    if profiles is None:
-        profiles = textops.train_lang_profiles(
-            ex.filter(F.col("lang").isNotNull()), text="extracted_text", lang="lang"
-        )
-    lang = textops.lang_pred_ngram(
-        ex, profiles, text="extracted_text", id_col=id_col, out="lang_pred"
-    )
-    t = F.col("extracted_text")
-    sig = (
-        ex.withColumn("_toks", textops._lower_tokens(t))
-        .select(
-            id_col, "url", "extracted_text",
-            F.bround(textops.quality_score(t), 6).alias("quality"),
-            F.size("_toks").cast("long").alias("n_tokens"),
-            textops.repetition_flags_from(F.col("_toks")).alias("rep_pass"),
-        )
-        .join(lang, id_col)
-        .withColumn("tile_group", bucket)
-    )
-    c1 = run_stage(spark, sig, "webtext_signals", root)
+    c1 = run_stage(spark, sig.withColumn("tile_group", bucket), "webtext_signals", root)
 
     committed = read_stage(spark, root, "webtext_signals")
-    from hope_graph_builder_spark.checkpoint.manifest import read_manifest
-
     fp_row = (
         read_manifest(spark, root)
         .filter((F.col("stage") == "webtext_signals") & (F.col("status") == "done"))
@@ -224,22 +246,8 @@ def run_webtext_ingest_checkpointed(
         committed.select(id_col, F.col("extracted_text").alias("text")),
         id_col=id_col,
     ).select(id_col, "cluster_id")
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("rep_pass"), F.desc("quality"), F.asc(id_col)
-    )
-    final = (
-        committed.join(clusters, id_col)
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn(
-            "keep",
-            (F.col("_rn") == 1)
-            & (F.col("quality") >= F.lit(float(quality_min)))
-            & F.col("rep_pass"),
-        )
-        .select(
-            id_col, "url", "lang_pred", "quality", "n_tokens",
-            "rep_pass", "cluster_id", "keep", "tile_group",
-        )
-    )
+    final = _canonical_keep(
+        committed.join(clusters, id_col), id_col, quality_min, F.lit(True)
+    ).select(id_col, *_OUT_COLS, "keep", "tile_group")
     c2 = run_stage(spark, final, final_stage, root)
     return {"signals": c1, "final": c2, "final_stage": final_stage}

@@ -9,6 +9,9 @@ batch pass over the continuously-appended signals table — the same
 lambda split the streaming spatial join documents
 (streaming/noise_stream.py).
 
+The quality / n_tokens / rep_pass expressions are the batch
+pipeline's own (pipelines/webtext.signal_columns); the stream keeps
+its per-row Column-fold ``lang_pred`` and its extra ``dup_bi``.
 Stream ≡ batch is pytest-asserted: the streamed signals must equal
 run_webtext_ingest's signal columns row-for-row.
 """
@@ -20,6 +23,7 @@ from pyspark.sql import functions as F
 
 from hope_graph_builder_spark.operators import text as textops
 from hope_graph_builder_spark.operators.extract import extract_text
+from hope_graph_builder_spark.pipelines.webtext import signal_columns
 
 
 def read_pages_stream(
@@ -60,12 +64,14 @@ def streaming_webtext_signals(
         lang = textops.lang_pred_ngram_expr(F.col("_tri"), profiles)
     else:
         lang = textops.lang_id(t)
+    toks = F.col("_toks")
+    quality, n_tokens, rep_pass = signal_columns(t, toks)
     return ex.withColumn("_toks", textops._lower_tokens(t)).select(
         id_col,
         "url",
         lang.alias("lang_pred"),
-        F.bround(textops.quality_score(t), 6).alias("quality"),
-        F.size("_toks").cast("long").alias("n_tokens"),
-        textops.dup_ngram_ratio_from(F.col("_toks"), 2).alias("dup_bi"),
-        textops.repetition_flags_from(F.col("_toks")).alias("rep_pass"),
+        quality,
+        n_tokens,
+        textops.dup_ngram_ratio_from(toks, 2).alias("dup_bi"),
+        rep_pass,
     )

@@ -15,6 +15,12 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def test_pip_join_broadcasts_polygons(spark):
     pts = synth.page_points(spark, SF_TINY)
     layers = synth.noise_layers(spark)
@@ -312,14 +318,31 @@ def test_corpus_curation_plan(spark):
     d = spark.read.parquet(f"{SF_TINY}/documents.parquet").select(
         "doc_id", "source", "text"
     )
-    plan = _plan(run_corpus_curation(
+    out = run_corpus_curation(
         d, quota_per_source=4, token_budget=2000, seq_len=16, overlap=4,
         n_shards=4,
         gate_cols=["ok_word_count", "ok_mean_word_len"],
-    ))
+    )
+    plan = _plan(out)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # the gated and capped sets are materialized once (lazy
+    # localCheckpoint): no consumer re-reads the documents
+    assert "Scan parquet" not in _formatted(out)
+
+
+def test_webtext_ingest_reads_pages_once(spark, tmp_path):
+    """The extracted corpus is materialized once (lazy localCheckpoint)
+    and every consumer — profile training, lang prediction, signals,
+    clustering — reads it back: the plan has no parquet scan left."""
+    from hope_graph_builder_spark.operators.extract import markup_pages
+    from hope_graph_builder_spark.pipelines.webtext import run_webtext_ingest
+
+    src = str(tmp_path / "pages")
+    markup_pages(synth.pages(spark, SF_TINY)).write.parquet(src)
+    out = run_webtext_ingest(spark.read.parquet(src))
+    assert "Scan parquet" not in _formatted(out)
 
 
 def test_vocab_topk_take_ordered(spark):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from hope_graph_builder_spark import synth
 from hope_graph_builder_spark.operators.spatial_join import pip_join_rect, pip_join_wkb
 from hope_graph_builder_spark.pipelines.overlay import (
-    overlay_share_convex,
+    overlay_share_general,
     overlay_share_rect,
 )
 from hope_graph_builder_spark.spatial import crs, wkb
@@ -55,10 +55,10 @@ def test_overlay_convex_matches_rect_path(spark):
         for a, b, c, d in zip(veg_pdf.minx, veg_pdf.miny, veg_pdf.maxx, veg_pdf.maxy)
     ]
     rect = overlay_share_rect(edges, spark.createDataFrame(veg_pdf), res=8).toPandas()
-    conv = overlay_share_convex(edges, spark.createDataFrame(veg_pdf2), res=8).toPandas()
-    m = rect.merge(conv, on=["edge_id", "veg_class"], suffixes=("_r", "_c"), how="outer")
-    assert m.share_r.notna().all() and m.share_c.notna().all()
-    assert (abs(m.share_r - m.share_c) < 1e-6).all()
+    gen = overlay_share_general(edges, spark.createDataFrame(veg_pdf2), res=8).toPandas()
+    m = rect.merge(gen, on=["edge_id", "veg_class"], suffixes=("_r", "_g"), how="outer")
+    assert m.share_r.notna().all() and m.share_g.notna().all()
+    assert (abs(m.share_r - m.share_g) < 1e-6).all()
 
 
 def test_crs_roundtrip(spark):
@@ -88,10 +88,7 @@ def test_wkt_roundtrips(spark):
 
 def test_overlay_general_concave_and_holes(spark):
     """overlay_share_general through the full Spark plan: concave ring
-    + hole vs hand-computed areas, and agreement with the convex path
-    on convex inputs."""
-    from hope_graph_builder_spark.pipelines.overlay import overlay_share_general
-
+    + hole vs hand-computed areas."""
     # one edge whose 30 m buffer is exactly [70,130]×[170,230]
     edges = spark.createDataFrame(
         [(1, 100.0, 200.0, 100.0, 200.0)], "edge_id long, x1 double, y1 double, x2 double, y2 double"
@@ -118,25 +115,6 @@ def test_overlay_general_concave_and_holes(spark):
     out2 = overlay_share_general(edges2, polys, res=9, area_q=100.0).collect()
     assert len(out2) == 1
     assert abs(out2[0]["share"] - 1200.0 / 3600.0) < 1e-12
-
-
-def test_overlay_general_matches_convex_on_convex(spark):
-    edges = synth.page_edges(spark, SF_TINY)
-    veg_pdf = synth._veg_grid_np()
-    veg_pdf["geom"] = [
-        wkb.rect_to_wkb(a, b, c, d)
-        for a, b, c, d in zip(veg_pdf.minx, veg_pdf.miny, veg_pdf.maxx, veg_pdf.maxy)
-    ]
-    from hope_graph_builder_spark.pipelines.overlay import (
-        overlay_share_convex,
-        overlay_share_general,
-    )
-
-    conv = overlay_share_convex(edges, spark.createDataFrame(veg_pdf), res=8).toPandas()
-    gen = overlay_share_general(edges, spark.createDataFrame(veg_pdf), res=8).toPandas()
-    m = conv.merge(gen, on=["edge_id", "veg_class"], suffixes=("_c", "_g"), how="outer")
-    assert m.share_c.notna().all() and m.share_g.notna().all()
-    assert (abs(m.share_c - m.share_g) < 1e-6).all()
 
 
 def test_dissolve_general_matches_rect_dissolve(spark):

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for every bench leg to plans/<tag>/<name>_<suffix>.txt.
+"""Dump .explain('formatted') for every bench leg, plus the webtext ingest
+and the corpus-curation chain, to plans/<tag>/<name>_<suffix>.txt.
 
 Usage: python tools/dump_plans.py r06 before
 """
@@ -20,10 +21,13 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from hope_graph_builder_spark import synth
+    from hope_graph_builder_spark.operators.extract import markup_pages
     from hope_graph_builder_spark.operators.spatial_join import (
         dwithin_join, hot_cell_factors, pip_join_rect, with_point_cell,
     )
+    from hope_graph_builder_spark.pipelines.curation import run_corpus_curation
     from hope_graph_builder_spark.pipelines.noise_join import run_noise_join
+    from hope_graph_builder_spark.pipelines.webtext import run_webtext_ingest
     from hope_graph_builder_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -52,6 +56,11 @@ def main() -> None:
         ),
         "edges_tenth",
     )
+    pages = materialize(markup_pages(synth.pages(spark, sf_dir)), "pages")
+    docs = materialize(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "source", "text"),
+        "documents",
+    )
     pw = with_point_cell(points, "x", "y", 7)
     hot = hot_cell_factors(pw, threshold=max(125 * mult, 100_000)).localCheckpoint()
 
@@ -67,6 +76,13 @@ def main() -> None:
         "dwithin_join": dwithin_join(
             points.filter(F.col("doc_id") % 10 != 0), edges_tenth, dist=30.0, res=9),
         "flagship_noise_join": run_noise_join(edges, layers, synth.NODATA_RECT, res=7),
+        # the ingest's clustering fixpoint runs eagerly while it is built
+        "webtext_ingest": run_webtext_ingest(pages),
+        "corpus_curation": run_corpus_curation(
+            docs, quota_per_source=300, token_budget=2_000_000, seq_len=64,
+            overlap=8, n_shards=32,
+            gate_cols=["ok_word_count", "ok_mean_word_len", "ok_symbol_ratio"],
+        ),
     }
     outdir = os.path.join(REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
